@@ -1,4 +1,5 @@
 package graft
+import graft.gates.Gates
 import org.apache.spark.sql.DataFrame
 import scala.jdk.CollectionConverters._
 object Bench {
@@ -86,11 +87,11 @@ object Bench {
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     only.foreach { names =>
       require(names.nonEmpty, "SPARK_GRAFT_ONLY is set but selects zero queries")
-      val unknown = names -- SparkEntry.queries.keySet
+      val unknown = names -- Gates.byName.keySet
       require(unknown.isEmpty,
         s"SPARK_GRAFT_ONLY names unknown queries: ${unknown.toSeq.sorted.mkString(", ")}")
     }
-    val selected = only.fold(SparkEntry.queries)(s => SparkEntry.queries.filter(kv => s(kv._1)))
+    val selected = only.fold(Gates.byName)(s => Gates.byName.filter(kv => s(kv._1)))
     // --runs N (or SPARK_GRAFT_RUNS): repeat the whole selected surface N
     // times and report per-query MEDIANS plus spread, so a round record is
     // one command instead of hand-assembled medians-of-3. Runs iterate
@@ -120,33 +121,39 @@ object Bench {
     spark.sparkContext.setLogLevel("WARN")
     // absorb session/codegen/JIT warmup so per-query numbers reflect
     // steady state instead of charging startup to whichever query runs first
-    SparkEntry.queries.get("s2_window_scan").foreach { fn =>
-      try consume(fn(spark, sfDir)) catch { case _: Throwable => () }
+    Gates.byName.get("s2_window_scan").foreach { g =>
+      try consume(g(spark, sfDir)) catch { case _: Throwable => () }
     }
-    // prebuild the per-process fixture stores/certification sides OUTSIDE
-    // the timed region (r19 verdict item 3): the sharpen gate's brute-force
-    // oracle searches and the BM25 index builds are corpus-deterministic
-    // certification cost, not operator cost — steady-state s/q then tracks
-    // the operators. The driver's Verify (fresh JVM) still pays and
-    // certifies the full builds; a prewarm failure only means the first
-    // timed invocation pays it, as before.
-    try Queries.prewarmFixtures(spark, sfDir, selected.keys)
-    catch { case e: Throwable =>
-      System.err.println(s"[bench] fixture prewarm failed (first run pays): ${e.getMessage}")
-    }
-    def oneRun(): Map[String, Option[Double]] = selected.map { case (name, fn) =>
-      val t0 = System.nanoTime()
-      // a failed query must be VISIBLE — in the JSON itself, not only on
-      // stderr: a fast-failing query would otherwise read as a green
-      // sub-second timing to any consumer of the results
-      val ok =
-        try { consume(fn(spark, sfDir)); true }
+    // each selected gate's prepare runs OUTSIDE the timed region: index
+    // builds, staged stores and certification sides are corpus-deterministic
+    // setup, not operator cost — steady-state s/q then tracks the operators.
+    // Verify (a fresh JVM) still pays and certifies the full builds. A
+    // failed prepare fails the gate: null timing, listed in failed, cause
+    // on stderr.
+    val timed: Map[String, Option[() => DataFrame]] = selected.map { case (name, g) =>
+      val run =
+        try Some(g.prepared(spark, sfDir))
         catch { case e: Throwable =>
-          System.err.println(s"[bench] $name FAILED: ${e.getMessage}"); false
+          System.err.println(s"[bench] $name prepare FAILED: $e"); None
         }
-      val dt = (System.nanoTime() - t0) / 1e9
-      graft.ext.Dedup.unpersistAll() // caches must not leak into the next query
-      name -> (if (ok) Some(dt) else None)
+      graft.ext.Dedup.unpersistAll() // setup caches must not leak into the timed runs
+      name -> run
+    }
+    def oneRun(): Map[String, Option[Double]] = timed.map {
+      case (name, None) => name -> None
+      case (name, Some(run)) =>
+        val t0 = System.nanoTime()
+        // a failed query must be VISIBLE — in the JSON itself, not only on
+        // stderr: a fast-failing query would otherwise read as a green
+        // sub-second timing to any consumer of the results
+        val ok =
+          try { consume(run()); true }
+          catch { case e: Throwable =>
+            System.err.println(s"[bench] $name FAILED: ${e.getMessage}"); false
+          }
+        val dt = (System.nanoTime() - t0) / 1e9
+        graft.ext.Dedup.unpersistAll() // caches must not leak into the next query
+        name -> (if (ok) Some(dt) else None)
     }
     val allRuns = (1 to runs).map { r =>
       if (runs > 1) System.err.println(s"[bench] run $r/$runs")

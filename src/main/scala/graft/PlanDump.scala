@@ -1,4 +1,5 @@
 package graft
+import graft.gates.Gates
 import java.nio.file.{Files, Paths}
 
 /** Dump the formatted physical plans of the headline queries to a markdown
@@ -45,7 +46,7 @@ object PlanDump {
       s"# Physical plans — generated by `runMain graft.PlanDump $sfDir`\n\n" +
         "Formatted `.explain` of the headline queries; regenerate after plan-affecting changes.\n")
     Headline.foreach { n =>
-      val df = SparkEntry.queries(n)(spark, sfDir)
+      val df = Gates.byName(n)(spark, sfDir)
       val plan = df.queryExecution.explainString(
         org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
       sb.append(s"\n## $n\n\n```\n$plan```\n")

@@ -1,4 +1,5 @@
 package graft
+import graft.gates.Gates
 import java.nio.file.{Files, Paths}
 
 /** Snapshot the formatted physical plan of named queries to individual
@@ -12,13 +13,13 @@ object PlanSnap {
       "usage: PlanSnap <sfDir> <outDir> <suffix> <comma-separated query names>")
     val Array(sfDir, outDir, suffix, namesCsv) = args
     val names = namesCsv.split(",").map(_.trim).filter(_.nonEmpty)
-    val unknown = names.filterNot(SparkEntry.queries.contains)
+    val unknown = names.filterNot(Gates.byName.contains)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
     Files.createDirectories(Paths.get(outDir))
     val spark = io.Sessions.builder("local[8]", 8).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
-      val df = SparkEntry.queries(n)(spark, sfDir)
+      val df = Gates.byName(n)(spark, sfDir)
       val plan = df.queryExecution.explainString(
         org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
       Files.writeString(Paths.get(outDir, s"${n}_$suffix.txt"), plan)

@@ -1,5 +1,6 @@
 package graft
 
+import graft.gates.Inputs
 import graft.ops.Ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -92,7 +93,7 @@ object ScaleSmoke {
 
     // ---- sync core at 12M rows ----
     time("windowed reload 12M") {
-      consume(Ops.windowedReload(bigLi, bigLi, "l_shipdate", Queries.LiFrom, Queries.LiTo))
+      consume(Ops.windowedReload(bigLi, bigLi, "l_shipdate", Inputs.LiFrom, Inputs.LiTo))
     }
     // the 100 TB layout claim: with a date-partitioned target, refreshing a
     // 7-day window must cost ~the window, not the table — compare the full
@@ -103,9 +104,9 @@ object ScaleSmoke {
         bigLi.withColumn("load_date", to_date(col("l_shipdate"))), Seq("load_date"))
     }
     time("partition-scoped 7-day window swap") {
-      val days = Iterator.iterate(Queries.LiFrom)(_.plusDays(1))
-        .takeWhile(!_.isAfter(Queries.LiTo)).toSeq
-      val fresh = Ops.windowScan(bigLi, "l_shipdate", Queries.LiFrom, Queries.LiTo)
+      val days = Iterator.iterate(Inputs.LiFrom)(_.plusDays(1))
+        .takeWhile(!_.isAfter(Inputs.LiTo)).toSeq
+      val fresh = Ops.windowScan(bigLi, "l_shipdate", Inputs.LiFrom, Inputs.LiTo)
         .withColumn("load_date", to_date(col("l_shipdate")))
       store.overwriteDatePartitions("lineitem_part", fresh, "load_date", days)
     }
@@ -155,7 +156,7 @@ object ScaleSmoke {
         bigLi.withColumn("load_date", to_date(col("l_shipdate"))), Seq("load_date"))
     }
     val band: Seq[(String, Any, Any)] = Seq(("load_date",
-      java.sql.Date.valueOf(Queries.LiFrom), java.sql.Date.valueOf(Queries.LiTo)))
+      java.sql.Date.valueOf(Inputs.LiFrom), java.sql.Date.valueOf(Inputs.LiTo)))
     val (kDay, tDay) = time("pruneEvidence over ~2.4k partition dirs") {
       ptr.pruneEvidence("li_pp", band)
     }
@@ -166,7 +167,7 @@ object ScaleSmoke {
     }
     val plainBand = time("unpruned equivalent (manifest read + filter)") {
       ptr.read("li_pp").filter(col("load_date").between(
-        java.sql.Date.valueOf(Queries.LiFrom), java.sql.Date.valueOf(Queries.LiTo))).count()
+        java.sql.Date.valueOf(Inputs.LiFrom), java.sql.Date.valueOf(Inputs.LiTo))).count()
     }
     require(prunedBand == plainBand && prunedBand > 0,
       s"partitioned pruned read disagrees: $prunedBand vs $plainBand")
@@ -175,7 +176,7 @@ object ScaleSmoke {
       val withUpd = bigEv.withColumn("update_ts",
         expr("ts + make_dt_interval(cast(event_id % 7 as int), 0, 0, 0)"))
       val changed = Ops.changedKeys(withUpd, "event_id", "ts", "update_ts",
-        Queries.EvFrom, Queries.EvTo)
+        Inputs.EvFrom, Inputs.EvTo)
       consume(Ops.upsert(bigEv, bigEv, "event_id", changed))
     }
 

@@ -646,7 +646,7 @@ object Dedup {
   /**
    * Incremental snapshot dedup — the recurring-ingest shape: keep only the
    * rows of a NEW `batch` whose content fingerprint (md5 of the sorted
-   * distinct token set, the [[graft.Queries]] `dedup_fingerprint` contract)
+   * distinct token set, the `dedup_fingerprint` gate contract)
    * is (a) absent from the established `corpus` and (b) first within the
    * batch itself (minimum `idCol`). The corpus is NEVER re-paired against
    * itself — each ingest pays one distinct-fingerprint projection of the

@@ -1,6 +1,7 @@
 package graft
 
 import graft.TestSpark
+import graft.gates.Gates
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,7 +12,7 @@ class AnalyticsQueriesSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private def q(name: String) = Queries.all(name)(spark, TestSpark.Sf0001)
+  private def q(name: String) = Gates.byName(name)(spark, TestSpark.Sf0001)
 
   test("window_order_ledger: seq is dense 1..n per customer and prev/next mirror neighbors") {
     val rows = q("window_order_ledger")

@@ -1,26 +1,21 @@
 package graft
 
+import graft.gates.{Gate, Gates}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Guards on the driver contract itself (SparkEntry): a typo'd oracle key or
-  * a query without an oracle silently downgrades the driver's correctness
-  * gate for that operator — fail here first. */
+/** Guards on the `SparkEntry` contract and the gate registry behind it.
+  * Every gate carries its oracle in its record, so a gate without an
+  * oracle cannot be written; a duplicated name would silently drop a gate
+  * from the correctness check — fail here first. */
 class ContractSpec extends AnyFunSuite {
 
-  /** Gates deliberately shipped WITHOUT an oracle (driver falls back to its
-    * rows-only check). Each needs a reason here and a spec pinning what the
-    * oracle can't. EMPTY since round 16: text_bpe_merges — the last holdout —
-    * now hash-gates the full merge table via the chained-CTE fixpoint unroll
-    * (Queries.bpeMergesOracle). */
-  private val rowsOnlyByDesign = Set.empty[String]
-
-  test("every gated query has an oracle and every oracle has a query") {
-    val q = SparkEntry.queries.keySet
-    val o = SparkEntry.oracleSql.keySet
-    assert(q.diff(o) == rowsOnlyByDesign.filter(q),
-      s"queries without oracles beyond the documented rows-only set: " +
-        s"${(q.diff(o) -- rowsOnlyByDesign).toSeq.sorted}")
-    assert(o.diff(q).isEmpty, s"oracles without queries: ${o.diff(q).toSeq.sorted}")
+  test("the gate registry refuses duplicate gate names") {
+    val g = Gate("dup_gate", "SELECT * FROM orders")((s, _) => s.emptyDataFrame)
+    val other = Gate("other_gate", "SELECT * FROM customer")((s, _) => s.emptyDataFrame)
+    val e = intercept[IllegalArgumentException](
+      Gates.registry(Seq(g, other, g.copy(oracle = "SELECT o_orderkey FROM orders"))))
+    assert(e.getMessage.contains("dup_gate") && !e.getMessage.contains("other_gate"))
+    assert(Gates.registry(Seq(g, other)).keySet == Set("dup_gate", "other_gate"))
   }
 
   test("flagship entry returns rows on sf0.001 (the driver's smoke check)") {

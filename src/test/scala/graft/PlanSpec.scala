@@ -1,5 +1,6 @@
 package graft
 
+import graft.gates.{Gates, Inputs}
 import graft.ops.Ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -26,7 +27,7 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterEach {
   private lazy val emb = graft.io.Tables.load(spark, TestSpark.Sf0001, "embeddings")
 
   test("windowScan's BETWEEN reaches the parquet scan as pushed filters") {
-    val p = plan(Ops.windowScan(li, "l_shipdate", Queries.LiFrom, Queries.LiTo))
+    val p = plan(Ops.windowScan(li, "l_shipdate", Inputs.LiFrom, Inputs.LiTo))
     // NB: the FileScan metadata string truncates at 100 chars, so assert on
     // the prefix of the pushed-filter list rather than its full text
     assert(p.contains("PushedFilters: [IsNotNull(l_shipdate), GreaterThanOrEqual(l_shipdate"),
@@ -67,7 +68,7 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterEach {
   }
 
   test("analytic window queries shuffle once on the partition key, never to one partition") {
-    val p = plan(Queries.all("window_order_ledger")(spark, TestSpark.Sf0001))
+    val p = plan(Gates.byName("window_order_ledger")(spark, TestSpark.Sf0001))
     assert(p.contains("Exchange hashpartitioning(o_custkey"), p.take(2000))
     assert(!p.contains("Exchange SinglePartition"), "ledger window must not single-partition")
   }
@@ -91,9 +92,9 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterEach {
     def agg(df: DataFrame) = df.groupBy(
         date_trunc("day", col("ts")).cast("timestamp_ntz").as("day"))
       .agg(count(lit(1)).as("n"))
-    val windowed = ev.filter(Ops.datePredicate("ts", Queries.EvFrom, Queries.EvTo))
+    val windowed = ev.filter(Ops.datePredicate("ts", Inputs.EvFrom, Inputs.EvTo))
     val p = plan(Ops.maintainDailyAgg(agg(ev), windowed, "day",
-      Queries.EvFrom, Queries.EvTo)(agg))
+      Inputs.EvFrom, Inputs.EvTo)(agg))
     // the fresh side's scan carries the caller's pushed date filter, so the
     // expensive aggregation reads the window, not the table
     assert(p.contains("PushedFilters: [IsNotNull(ts)"), p.take(3000))
@@ -109,7 +110,7 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterEach {
   test("changedKeys compiles to a single-column anti join (broadcastable shape)") {
     val ev = graft.io.Tables.load(spark, TestSpark.Sf0001, "events")
       .withColumn("update_ts", expr("ts + make_dt_interval(cast(event_id % 7 as int), 0, 0, 0)"))
-    val p = plan(Ops.changedKeys(ev, "event_id", "ts", "update_ts", Queries.EvFrom, Queries.EvTo))
+    val p = plan(Ops.changedKeys(ev, "event_id", "ts", "update_ts", Inputs.EvFrom, Inputs.EvTo))
     assert(p.contains("LeftAnti"), p.take(2000))
     assert(!p.contains("CartesianProduct"))
   }

@@ -1,5 +1,6 @@
 package graft
 
+import graft.gates.Gates
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Global physical-plan contract over EVERY gated query: nothing may plan a
@@ -113,9 +114,9 @@ class PlanSweepSpec extends AnyFunSuite {
       "dedup_cosine_lsh_sharpen")
 
   test("no gated query plans a cartesian product; BNLJ only where designed") {
-    val offenders = Queries.all.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
+    val offenders = Gates.byName.toSeq.sortBy(_._1).flatMap { case (name, gate) =>
       val plan =
-        try fn(spark, TestSpark.Sf0001).queryExecution.executedPlan.toString
+        try gate(spark, TestSpark.Sf0001).queryExecution.executedPlan.toString
         finally graft.ext.Dedup.unpersistAll()
       val cartesian = plan.contains("CartesianProduct")
       val bnlj = plan.contains("BroadcastNestedLoopJoin") &&

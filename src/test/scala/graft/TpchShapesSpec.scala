@@ -1,5 +1,6 @@
 package graft
 
+import graft.gates.Gates
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,7 +13,7 @@ class TpchShapesSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private def q(name: String) = Queries.all(name)(spark, TestSpark.Sf0001)
+  private def q(name: String) = Gates.byName(name)(spark, TestSpark.Sf0001)
   private def t(name: String) = graft.io.Tables.load(spark, TestSpark.Sf0001, name)
 
   test("q21: semi+anti decorrelation matches the brute-force EXISTS/NOT-EXISTS") {
