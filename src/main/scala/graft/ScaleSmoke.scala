@@ -503,7 +503,7 @@ object ScaleSmoke {
 
     // ---- similarity at 20k vectors ----
     val cp = time("cosine pairs 20k vectors") {
-      val n = graft.ext.Similarity.cosinePairs(bigEmb, "vec_id", "embedding", 0.9).count()
+      val n = graft.ext.Similarity.cosinePairsExact(bigEmb, "vec_id", "embedding", 0.9).count()
       graft.ext.Dedup.unpersistAll(); n
     }
     time("IVF ANN top-5, 100 queries") {
@@ -519,7 +519,7 @@ object ScaleSmoke {
         bigEmb, "vec_id", "embedding", 0.9, Seq(col("vec_id").asc))
         .select("vec_id", "embedding").localCheckpoint()
       val n = kept.count()
-      val residual = graft.ext.Similarity.cosinePairs(
+      val residual = graft.ext.Similarity.cosinePairsExact(
         kept, "vec_id", "embedding", 0.9).count()
       graft.ext.Dedup.unpersistAll()
       println(s"[scale]   semantic dedup: 20000 -> $n survivors, residual pairs $residual")
@@ -545,17 +545,17 @@ object ScaleSmoke {
     val emb40 = spark.read.parquet(s"$out/embeddings40k")
     val planted = emb40.filter(col("vec_id") < 0).count()
     val wideFixed = time("cosine pairs 40k @0.45 exact, fixed 16 lists") {
-      val n = graft.ext.Similarity.cosinePairs(emb40, "vec_id", "embedding", 0.45).count()
+      val n = graft.ext.Similarity.cosinePairsExact(emb40, "vec_id", "embedding", 0.45).count()
       graft.ext.Dedup.unpersistAll(); n
     }
     val wideSqrt = time("cosine pairs 40k @0.45 exact, sqrt-n (200) lists") {
-      val n = graft.ext.Similarity.cosinePairs(emb40, "vec_id", "embedding", 0.45,
+      val n = graft.ext.Similarity.cosinePairsExact(emb40, "vec_id", "embedding", 0.45,
         nlist = 200).count()
       graft.ext.Dedup.unpersistAll(); n
     }
     val (wideRouted, recovered) = time("cosine pairs 40k @0.45 ROUTED (banded LSH)") {
       val pairs = graft.ext.Similarity
-        .cosinePairsRouted(emb40, "vec_id", "embedding", 0.45).persist()
+        .cosinePairs(emb40, "vec_id", "embedding", 0.45).persist()
       val total = pairs.count()
       // a planted pair is (orig, -(orig+1)) in either column order
       val rec = pairs.filter(col("id_a") === -col("id_b") - 1 ||
@@ -592,7 +592,7 @@ object ScaleSmoke {
       consume(graft.ext.Similarity.quantizeInt8(wideEmb, "vec_id", "embedding"))
     }
     val cpw = time("cosine pairs 20k dim-1024 @0.9") {
-      val n = graft.ext.Similarity.cosinePairs(wideEmb, "vec_id", "embedding", 0.9).count()
+      val n = graft.ext.Similarity.cosinePairsExact(wideEmb, "vec_id", "embedding", 0.9).count()
       graft.ext.Dedup.unpersistAll(); n
     }
     time("IVF ANN dim-1024 top-5, 100 queries") {

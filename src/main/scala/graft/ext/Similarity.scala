@@ -22,14 +22,6 @@ object Similarity {
     * `aggregate(zip_with(...))` equivalent is ~40× slower on pair scans. */
   def dot(a: Column, b: Column): Column = vec_dot(a, b)
 
-  /** Persist `df` into the per-thread tracked-cache registry that
-    * [[graft.ext.Dedup.unpersistAll]] releases — for callers composing
-    * SEVERAL pair searches into one result frame: a pair-search DataFrame
-    * referenced by more than one downstream branch (e.g. both sides of a
-    * contract check) otherwise re-executes its whole blocking+verify
-    * pipeline once per reference. */
-  def trackedPersist(df: DataFrame): DataFrame = Caches.track(df)
-
   def norm(v: Column): Column = sqrt(dot(v, v))
 
   /** Cosine similarity of two raw (unnormalized) double vectors. */
@@ -79,7 +71,7 @@ object Similarity {
    * overlap with [[plantNearDups]]' `-(id+1)` companions). This is the
    * fixture generator for the auto-sharpen certification gate: a cluster
    * like this packs enough moderately-similar vectors into the 12×12
-   * band buckets to blow a small pair budget at the caller's shape,
+   * band buckets to blow a small pair budget at that base shape,
    * forcing [[cosinePairsLsh]]'s escalation ladder to engage.
    */
   def plantDenseCluster(df: DataFrame, idCol: String, vecCol: String,
@@ -333,18 +325,7 @@ object Similarity {
   }
 
   /**
-   * Margin-based bitext mining (the LASER/CCMatrix parallel-corpus
-   * criterion, Artetxe & Schwenk 2019): candidate pairs are MUTUAL nearest
-   * neighbors across the two sides, scored by the ratio margin
-   * `cos(x,y) / ((mean top-k cos of x in B + mean top-k cos of y in A)/2)`
-   * — the margin discounts hubs (vectors close to everything), which a raw
-   * cosine cut cannot, and is the standard filter for mining aligned
-   * sentence/document pairs for translation training data.
-   *
-   * Returns `(a_id, b_id, margin)` for every mutual-NN1 pair, margin
-   * rounded to 6, ordered margin DESC with `a_id` tiebreak. No threshold is
-   * applied here — thresholding is a caller policy (and a gate with a cut
-   * would flap on the boundary ulp); the margin column is the cut key.
+   * [[bitextMarginMine]]'s exact route: the full |A|×|B| cosine grid.
    *
    * Determinism contract (the oracle mirrors every step): ranks use the
    * (cos DESC, id ASC) total order; the top-k means are summed as EXACT
@@ -355,14 +336,12 @@ object Similarity {
    * Plan shape: side B broadcasts (the [[topK]] contract — side A streams
    * once, never shuffles for scoring), the scored pair frame is cached and
    * projected NARROW (ids + cos, 24 bytes/row at any dimension) before the
-   * two rank windows. This brute-force pair source is exact and right when
-   * one side fits a broadcast (the usual mining shape: a query batch
-   * against a corpus shard); for two huge sides swap the pair source for
-   * the IVF-routed pool ([[annSearchIvf]] / [[cosinePairsRouted]]) — the
-   * margin algebra downstream of `scored` is pair-source-independent.
+   * two rank windows. Right while one side fits a broadcast; past the
+   * crossover the router swaps in [[bitextMarginMinePooled]]'s IVF pools —
+   * the margin algebra downstream of `scored` is pair-source-independent.
    */
-  def bitextMarginMine(a: DataFrame, b: DataFrame, idCol: String,
-      vecCol: String, k: Int = 4): DataFrame = {
+  private[graft] def bitextMarginMineExact(a: DataFrame, b: DataFrame, idCol: String,
+      vecCol: String, k: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1: $k")
     // raw-cosine form (dot / (norm·norm)), NOT normalize-then-dot: the
     // rounded VALUE is compared against DuckDB's list_cosine_similarity
@@ -414,9 +393,8 @@ object Similarity {
     * excluding id-equal pairs (bitext sides are separate id spaces; a
     * same-id pair across sides is a legitimate candidate). */
   private def ivfPoolScored(corpus: DataFrame, queries: DataFrame, idCol: String,
-      vecCol: String, k: Int, nlist: Int, nprobe: Int, sampleSize: Int,
-      seed: Long): DataFrame = {
-    val cents = trainCentroids(corpus, vecCol, nlist, sampleSize, seed)
+      vecCol: String, k: Int, nlist: Int, nprobe: Int, sampleSize: Int): DataFrame = {
+    val cents = trainCentroids(corpus, vecCol, nlist, sampleSize, 42L)
     val c = Caches.track(unitized(corpus, idCol, vecCol, "neighbor_id", "cv")
       .withColumn("list", listAssignment(col("cv"), cents)))
     val scored = broadcast(probes(cents, queries, idCol, vecCol, nprobe)).join(c, Seq("list"))
@@ -438,14 +416,14 @@ object Similarity {
   }
 
   /**
-   * [[bitextMarginMine]]'s 100 TB path: the same mutual-NN1 + ratio-margin
+   * [[bitextMarginMine]]'s 100 TB route: the same mutual-NN1 + ratio-margin
    * algebra, but candidate pools come from TWO IVF probes (index B / probe
    * with A, and index A / probe with B) instead of the exact |A|×|B| grid —
    * exactly how CCMatrix runs the criterion (margins over FAISS k-NN lists,
    * Schwenk et al. 2021). Each side's corpus shuffles once on small `list`
    * keys; nothing all-pairs forms at any size. At full probe
    * (`nprobe = nlist`) the pools are exhaustive and the result coincides
-   * with the exact operator (spec-pinned); at partial probe it trades
+   * with the exact route (spec-pinned); at partial probe it trades
    * recall for the probe fraction like every IVF path here.
    *
    * The A→B and B→A cosines of one pair are bit-identical (commutative
@@ -453,16 +431,16 @@ object Similarity {
    * order), so the two pools agree on every shared pair's score and the
    * mutual-NN1 test cannot flap between directions.
    */
-  def bitextMarginMinePooled(a: DataFrame, b: DataFrame, idCol: String,
-      vecCol: String, k: Int = 4, nlist: Int = 16, nprobe: Int = 6,
-      sampleSize: Int = 4096, seed: Long = 42L): DataFrame = {
+  private[graft] def bitextMarginMinePooled(a: DataFrame, b: DataFrame, idCol: String,
+      vecCol: String, k: Int, nlist: Int, nprobe: Int,
+      sampleSize: Int = 4096): DataFrame = {
     require(k >= 1, s"k must be >= 1: $k")
     val ab = Caches.track(
-      ivfPoolScored(b, a, idCol, vecCol, k, nlist, nprobe, sampleSize, seed)
+      ivfPoolScored(b, a, idCol, vecCol, k, nlist, nprobe, sampleSize)
         .select(col("query_id").as("a_id"), col("neighbor_id").as("b_id"),
           col("cos"), col("rnk").as("rn_a")))
     val ba = Caches.track(
-      ivfPoolScored(a, b, idCol, vecCol, k, nlist, nprobe, sampleSize, seed)
+      ivfPoolScored(a, b, idCol, vecCol, k, nlist, nprobe, sampleSize)
         .select(col("query_id").as("b_id"), col("neighbor_id").as("a_id"),
           col("cos").as("cos_ba"), col("rnk").as("rn_b")))
     val ma = ab.groupBy("a_id")
@@ -834,10 +812,46 @@ object Similarity {
         transform(col("__v"), x => floor(x * col("scale") + lit(0.5))).as("qvec"))
   }
 
+  /** The size crossover both routers share: at or under this many vectors
+    * the exact routes stay ahead. Measured at threshold 0.45 (BASELINE.md
+    * r11 probe): exact pair search took 9.9 s at 20 k vectors and 61.6 s at
+    * 40 k — the wide probe radius covers most IVF lists, so candidates grow
+    * toward all-pairs past this size regardless of `nlist`. */
+  private val ExactMaxRows = 20000L
+
+  /** Pair-search thresholds at or above this stay exact at any size: the
+    * exact blocking probes ~1–2 lists there and stays near-linear at every
+    * measured scale (BASELINE.md r11/r12 probes). */
+  private val TightThreshold = 0.8
+
   /**
    * Embedding near-duplicate pairs: all `(id_a < id_b)` with cosine ≥
-   * `threshold` — EXACT, but blocked through the IVF quantizer so no
-   * full-corpus broadcast or O(n²) pair scan ever forms.
+   * `threshold`, routed on the threshold and the row count — the operator
+   * form of the measured regimes:
+   *
+   *  - TIGHT thresholds (≥ 0.8): [[cosinePairsExact]]'s blocking probes
+   *    ~1–2 lists and stays near-linear at any measured scale → exact
+   *    recall for free; always routed there.
+   *  - WIDE thresholds on a SMALL corpus (≤ 20 k vectors, the measured
+   *    crossover): still exact; the quadratic term hasn't bitten yet.
+   *  - WIDE thresholds at scale: [[cosinePairsLsh]] — candidates from
+   *    banded sign-bit collisions instead of an exact-recall probe radius
+   *    that covers most lists. Zero false positives (exact verification);
+   *    recall follows the band curve (≈1 for near-dup pairs, decaying for
+   *    moderate-similarity pairs).
+   *
+   * One `count()` job decides the size regime (skipped for tight
+   * thresholds). Returns `(id_a < id_b)` pairs in every regime.
+   */
+  def cosinePairs(emb: DataFrame, idCol: String, vecCol: String,
+      threshold: Double): DataFrame =
+    if (threshold >= TightThreshold || emb.count() <= ExactMaxRows)
+      cosinePairsExact(emb, idCol, vecCol, threshold)
+    else cosinePairsLsh(emb, idCol, vecCol, threshold)
+
+  /**
+   * [[cosinePairs]]'s exact route — EXACT, but blocked through the IVF
+   * quantizer so no full-corpus broadcast or O(n²) pair scan ever forms.
    *
    * Blocking with a recall GUARANTEE (threshold-aware probe/index
    * asymmetry): every vector is INDEXED under its single nearest list, and
@@ -856,20 +870,14 @@ object Similarity {
    * only inside lists (one shuffle on list id, the join output streams
    * through the dot filter unmaterialized). Probe fan-out adapts to the
    * data: tight near-dup thresholds (0.8+) probe ~1 list; loose thresholds
-   * widen the radius — raise `nlist` to keep lists small.
+   * widen the radius. The r11 scale probe (BASELINE.md) measured √n lists
+   * 2–4× SLOWER than the fixed 16 at threshold 0.45: a wide radius covers
+   * most lists whatever their number, so the probe explode grows ∝ n×nlist
+   * while candidate pairs barely shrink.
    */
-  def cosinePairs(emb: DataFrame, idCol: String, vecCol: String, threshold: Double,
-      nlist: Int = 16, sampleSize: Int = 4096, seed: Long = 42L): DataFrame = {
-    // nlist <= 0 ⇒ ~√n lists (classic IVF sizing; one count() job). NB this
-    // is NOT a universal win and is deliberately not the default: the r11
-    // scale probe (BASELINE.md) measured √n-retuning 2–4× SLOWER than fixed
-    // nlist=16 at threshold 0.45 on jittered embeddings — a wide threshold
-    // (θ_t ≈ 63°) makes the probe radius cover most lists, so the probe
-    // explode grows ∝ n×nlist while candidate pairs barely shrink. Retune
-    // upward only for TIGHT thresholds (0.8+, probe fan-out ~1–2 lists),
-    // where bigger nlist genuinely shrinks per-list pair products.
-    val lists = if (nlist > 0) nlist else math.max(16, math.sqrt(emb.count().toDouble).toInt)
-    val cents = trainCentroids(emb, vecCol, lists, sampleSize, seed)
+  private[graft] def cosinePairsExact(emb: DataFrame, idCol: String, vecCol: String,
+      threshold: Double, nlist: Int = 16): DataFrame = {
+    val cents = trainCentroids(emb, vecCol, nlist, 4096, 42L)
     val u = unitized(emb, idCol, vecCol, "id", "v")
     // clamp into acos' domain; +1e-9 absorbs float rounding at the boundary.
     // ONE codegen'd centroid_angles expression, NOT transform(sims, lambda)
@@ -907,15 +915,25 @@ object Similarity {
       .distinct()
   }
 
+  /** [[cosinePairsLsh]]'s band shapes (bands × rowsPerBand), the 12×12 base
+    * shape first. Recall math (P(candidate | cos >= 0.99), p = 1 − θ/π ≈
+    * 0.955 there): every rung keeps 1 − (1 − p^r)^b ≥ 0.99. The r18 ladder
+    * topped out at 22×32 (0.9967); the r20 100× probe found that rung
+    * saturating on clustered corpora (200k vectors at τ=0.45 → 171M
+    * candidates of which ~0 are true pairs — sign-structure collisions, not
+    * output), so two deeper rungs follow: 40×48 (p^48 ≈ 0.110 → 0.9905)
+    * cuts a cos-0.9 bucket's collision rate ~12× over 32 bits, and 78×62
+    * (p^62 ≈ 0.058 → 0.9903) is the 62-bit packing ceiling. Deeper rungs
+    * cost more projections per row (40×48 = 1920 dots, linear, no shuffle)
+    * but only run when every earlier rung over-budgets — the probe that
+    * engages them is still one count-aggregation per rung, no pairs. */
+  private val LshLadder = Seq((12, 12), (14, 16), (16, 20), (18, 24), (20, 28),
+    (22, 32), (40, 48), (78, 62))
+
   /**
-   * Embedding near-dup pairs via random-hyperplane (signed random
-   * projection) LSH with EXACT re-verification — the wide-threshold scale
-   * path [[cosinePairsRouted]] switches to where [[cosinePairs]]'s
-   * exact-recall blocking goes super-linear (measured: 9.9 → 61.6 s for
-   * 2× data past 20 k vectors at threshold 0.45, BASELINE.md r11 probe —
-   * a wide threshold makes the triangle-inequality probe radius cover
-   * most IVF lists, so candidates degrade toward all-pairs regardless of
-   * `nlist`).
+   * [[cosinePairs]]'s wide-threshold scale route: random-hyperplane (signed
+   * random projection) LSH with EXACT re-verification, for where
+   * [[cosinePairsExact]]'s exact-recall blocking goes super-linear.
    *
    * Scheme (public SimHash/SRP literature): `bands × rowsPerBand` random
    * hyperplanes (seeded Gaussian, driver-side); each vector's sign bits
@@ -924,101 +942,64 @@ object Similarity {
    * frame, pair expansion only inside buckets); candidates are verified
    * with the exact codegen'd dot product. ZERO false positives, always.
    *
-   * Recall contract (the per-regime honesty [[cosinePairs]]'s exact
+   * Recall contract (the per-regime honesty [[cosinePairsExact]]'s exact
    * guarantee is traded for): a pair at angle θ collides per bit with
    * `p = 1 − θ/π`, so `P(candidate) = 1 − (1 − p^rowsPerBand)^bands`.
-   * With the 12×12 default: ~1.0 at cos ≥ 0.99 (near-dup replicas), 0.87
+   * With the 12×12 base shape: ~1.0 at cos ≥ 0.99 (near-dup replicas), 0.87
    * at cos 0.9, decaying toward zero near a wide threshold like 0.45 —
    * by design: near-random moderate-similarity pairs are exactly the
-   * candidate mass that makes the exact path quadratic. Raise `bands`
-   * (more recall, more candidate cost) or `rowsPerBand` (less of both)
-   * to move the knee; the bit cost is `bands × rowsPerBand` dot products
-   * per row, one narrow map, no shuffle.
+   * candidate mass that makes the exact path quadratic. The bit cost is
+   * `bands × rowsPerBand` dot products per row, one narrow map, no shuffle.
    *
-   * AUTO-SHARPENING (r18, on by default): a dense corpus — clustered
-   * embeddings, replicated shards — can pack enough moderately-similar
-   * vectors into one band bucket to blow the pair budget at the caller's
-   * band shape (the r17 30× marathon refused here by design). Before
-   * expanding anything, the candidate count is ESTIMATED from per-bucket
-   * sizes (one count-aggregation, no pairs form); while it exceeds
-   * `pairBudget` the scheme escalates through sharper shapes (the
-   * caller's own shape is kept whenever its estimate fits `pairBudget`;
-   * escalating rungs aim at the tighter `pairBudget/4` so a forced
-   * escalation lands well under the refusal line) — more bits
-   * per band fragments moderate-similarity buckets sharply, and more
-   * bands compensate the near-dup band's recall (12×12 → … → 20×28 keeps
-   * P(candidate | cos ≥ 0.99) ≥ 0.99 at every step, since
-   * p = 1−θ/π ≈ 0.955 there). Only if the SHARPEST shape still exceeds
-   * the budget does [[graft.ext.Dedup.bucketPairs]] refuse loudly — at
-   * that point the collisions are genuine near-dups and the output itself
-   * would be pair-budget-sized. Pass `autoSharpen = false` to pin the
-   * caller's exact shape (the recall-contract gate does, so its planted
-   * band curve stays the documented 12×12 one).
+   * AUTO-SHARPENING (r18): a dense corpus — clustered embeddings,
+   * replicated shards — can pack enough moderately-similar vectors into
+   * one band bucket to blow the pair budget at the base shape (the r17 30×
+   * marathon refused here by design). Before expanding anything, the
+   * candidate count is ESTIMATED from per-bucket sizes (one
+   * count-aggregation, no pairs form); while it exceeds `pairBudget` the
+   * scheme escalates through [[LshLadder]]'s sharper shapes (the base
+   * shape is kept whenever its estimate fits `pairBudget`; escalating rungs
+   * aim at the tighter `pairBudget/4` so a forced escalation lands well
+   * under the refusal line) — more bits per band fragments
+   * moderate-similarity buckets sharply, and more bands compensate the
+   * near-dup band's recall. Only if the SHARPEST shape still exceeds the
+   * budget does [[graft.ext.Dedup.bucketPairs]] refuse loudly — at that
+   * point the collisions are genuine near-dups and the output itself would
+   * be pair-budget-sized.
    */
-  def cosinePairsLsh(emb: DataFrame, idCol: String, vecCol: String, threshold: Double,
-      bands: Int = 12, rowsPerBand: Int = 12, seed: Long = 42L,
-      pairBudget: Long = graft.ext.Dedup.DefaultPairBudget,
-      autoSharpen: Boolean = true): DataFrame = {
-    require(bands > 0 && rowsPerBand > 0 && rowsPerBand <= 62,
-      s"bands/rowsPerBand must be positive (rowsPerBand <= 62): $bands x $rowsPerBand")
+  private[graft] def cosinePairsLsh(emb: DataFrame, idCol: String, vecCol: String,
+      threshold: Double, pairBudget: Long = graft.ext.Dedup.DefaultPairBudget): DataFrame = {
     val firstRow = emb.select(col(vecCol)).limit(1).collect()
     require(firstRow.nonEmpty, "cosinePairsLsh: empty corpus")
     val dim = firstRow(0).getSeq[Float](0).length
     // cached: the unitized corpus feeds the band projection and BOTH verify
     // sides (Caches.unpersistAll releases it)
     val u = Caches.track(unitized(emb, idCol, vecCol, "id", "v"))
-    // per-band bucket keys: rowsPerBand sign bits packed into a long, then
-    // mixed with the band ordinal so bands never collide with each other —
-    // ONE codegen'd sign_band_keys expression (the plane matrix travels as
-    // a single plan reference; the previous bands x rowsPerBand inline
-    // when(dot(...)) block overflowed janino's 64 KB method limit at
-    // 144 planes and silently ran interpreted — the r15 ScaleSmoke find)
-    def keyedFor(b: Int, r: Int): DataFrame = signBandKeyed(u, dim, b, r, seed)
-    def estPairs(keyed: DataFrame): Long = estBucketPairs(keyed)
-    // Ladder recall math (P(candidate | cos >= 0.99), p = 1 − θ/π ≈ 0.955
-    // there): every rung keeps 1 − (1 − p^r)^b ≥ 0.99. The r18 ladder
-    // topped out at +10/+20 (22×32 from the 12×12 default, 0.9967); the
-    // r20 100× probe found that rung saturating on clustered corpora
-    // (200k vectors at τ=0.45 → 171M candidates of which ~0 are true
-    // pairs — sign-structure collisions, not output), so two deeper rungs
-    // follow: 40×48 (p^48 ≈ 0.110 → 0.9905) cuts a cos-0.9 bucket's
-    // collision rate ~12× over 32 bits, and 78×62 (p^62 ≈ 0.058 →
-    // 0.9903) is the 62-bit packing ceiling. Deeper rungs cost more
-    // projections per row (40×48 = 1920 dots, linear, no shuffle) but
-    // only run when every earlier rung over-budgets — the probe that
-    // engages them is still one count-aggregation per rung, no pairs.
-    val ladder =
-      if (!autoSharpen || pairBudget <= 0) Seq((bands, rowsPerBand))
-      else (Seq((bands, rowsPerBand), (bands + 2, rowsPerBand + 4),
-        (bands + 4, rowsPerBand + 8), (bands + 6, rowsPerBand + 12),
-        (bands + 8, rowsPerBand + 16), (bands + 10, rowsPerBand + 20))
-        .map { case (b, r) => (b, math.min(r, 62)) }) ++
-        Seq((math.max(bands + 28, 40), 48), (math.max(bands + 66, 78), 62))
-    // the caller's own shape WINS whenever its estimate fits pairBudget —
+    val (bands, rowsPerBand) = LshLadder.head
+    // the base shape WINS whenever its estimate fits pairBudget —
     // sharpening it further would silently trade away moderate-similarity
-    // recall the caller sized for (r18 ADVICE fix: the old code escalated
-    // past a fitting caller shape toward pairBudget/4). Only once the
-    // caller's shape is over budget does the ladder engage, and THERE the
-    // tighter pairBudget/4 target applies (verification cost tracks the
-    // CANDIDATE count, so an escalating rung aims well under the refusal
-    // line); first rung under the budget itself is the fallback, then the
-    // sharpest rung (bucketPairs still enforces the hard refusal)
+    // recall (r18 ADVICE fix: the old code escalated past a fitting base
+    // shape toward pairBudget/4). Only once the base shape is over budget
+    // does the ladder engage, and THERE the tighter pairBudget/4 target
+    // applies (verification cost tracks the CANDIDATE count, so an
+    // escalating rung aims well under the refusal line); first rung under
+    // the budget itself is the fallback, then the sharpest rung
+    // (bucketPairs still enforces the hard refusal). No budget (0): the
+    // base shape, nothing to fit.
     val keyed: DataFrame =
-      if (ladder.size == 1) keyedFor(bands, rowsPerBand)
+      if (pairBudget <= 0) signBandKeyed(u, dim, bands, rowsPerBand)
       else {
         val tightTarget = math.max(1L, pairBudget / 4)
         var fallback: Option[(Int, Int, DataFrame)] = None
         var pick: Option[(Int, Int, DataFrame)] = None
         var last: Option[(Int, Int, DataFrame)] = None
-        // the 62-bit clamp can collapse the top rungs to one shape —
-        // dedupe so a shape is never estimated twice (r18 review fix)
-        val it = ladder.distinct.iterator
+        val it = LshLadder.iterator
         var first = true
         while (pick.isEmpty && it.hasNext) {
           val (b, r) = it.next()
-          val k = keyedFor(b, r)
+          val k = signBandKeyed(u, dim, b, r)
           last = Some((b, r, k))
-          val est = estPairs(k)
+          val est = estBucketPairs(k)
           val target = if (first) pairBudget else tightTarget
           if (est <= target) pick = Some((b, r, k))
           else if (est <= pairBudget && fallback.isEmpty) fallback = Some((b, r, k))
@@ -1057,16 +1038,17 @@ object Similarity {
       .select(col("doc_a").as("id_a"), col("doc_b").as("id_b"))
   }
 
-  /** Per-band bucket keys for a unitized `(id, v)` frame at shape
-    * `b × r` under `seed` — the ONE primitive [[cosinePairsLsh]]'s ladder
-    * and [[lshCandidateEstimate]] share, so an external estimate can never
+  /** Per-band bucket keys for a unitized `(id, v)` frame at shape `b × r`
+    * — the ONE primitive [[cosinePairsLsh]]'s ladder and
+    * [[lshCandidateEstimate]] share, so an external estimate can never
     * drift from the operator's own bucketing. `rowsPerBand` sign bits pack
     * into a long mixed with the band ordinal (bands never collide); one
     * codegen'd `sign_band_keys` expression — the plane matrix travels as a
-    * single plan reference (the r15 janino 64 KB find). */
-  private def signBandKeyed(u: DataFrame, dim: Int, b: Int, r: Int,
-      seed: Long): DataFrame = {
-    val rnd = new scala.util.Random(seed)
+    * single plan reference (the previous bands × rowsPerBand inline
+    * when(dot(...)) block overflowed janino's 64 KB method limit at 144
+    * planes and silently ran interpreted — the r15 ScaleSmoke find). */
+  private def signBandKeyed(u: DataFrame, dim: Int, b: Int, r: Int): DataFrame = {
+    val rnd = new scala.util.Random(42L)
     val planes = Array.fill(b * r)(Array.fill(dim)(rnd.nextGaussian()))
     val bandKeys = org.apache.spark.sql.graftx.VectorFunctions.sign_band_keys(
       col("v"), planes, b, r)
@@ -1082,52 +1064,24 @@ object Similarity {
     .head().getLong(0) / 2
 
   /**
-   * The candidate-pair estimate [[cosinePairsLsh]] would compute for
-   * `emb` at band shape `bands × rowsPerBand` under `seed` — built from
-   * the operator's OWN bucketing primitive, so the number matches the
-   * internal ladder's first-rung estimate exactly. Public so a
-   * certification gate can assert its forcing premise at runtime (the
-   * `dedup_cosine_lsh_sharpen` gate emits a violation row when the
-   * caller-shape estimate no longer exceeds the budget it was sized to
-   * blow — without this, a fixture drift would leave the ladder
-   * unexercised and the gate silently vacuous).
+   * The candidate-pair estimate [[cosinePairsLsh]] computes for `emb` at
+   * its 12×12 base shape — built from the operator's OWN bucketing
+   * primitive, so the number matches the internal ladder's first-rung
+   * estimate exactly. A certification gate asserts its forcing premise
+   * with it at runtime (the `dedup_cosine_lsh_sharpen` gate emits a
+   * violation row when the base-shape estimate no longer exceeds the
+   * budget it was sized to blow — without this, a fixture drift would
+   * leave the ladder unexercised and the gate silently vacuous).
    */
-  def lshCandidateEstimate(emb: DataFrame, idCol: String, vecCol: String,
-      bands: Int = 12, rowsPerBand: Int = 12, seed: Long = 42L): Long = {
-    require(bands > 0 && rowsPerBand > 0 && rowsPerBand <= 62,
-      s"bands/rowsPerBand must be positive (rowsPerBand <= 62): $bands x $rowsPerBand")
+  private[graft] def lshCandidateEstimate(emb: DataFrame, idCol: String,
+      vecCol: String): Long = {
     val firstRow = emb.select(col(vecCol)).limit(1).collect()
     require(firstRow.nonEmpty, "lshCandidateEstimate: empty corpus")
     val dim = firstRow(0).getSeq[Float](0).length
+    val (bands, rowsPerBand) = LshLadder.head
     estBucketPairs(signBandKeyed(
-      unitized(emb, idCol, vecCol, "id", "v"), dim, bands, rowsPerBand, seed))
+      unitized(emb, idCol, vecCol, "id", "v"), dim, bands, rowsPerBand))
   }
-
-  /**
-   * Threshold- and scale-aware pair search router — the operator form of
-   * the measured regimes (BASELINE.md r11/r12 probes):
-   *
-   *  - TIGHT thresholds (≥ `tightThreshold`, default 0.8): the exact
-   *    [[cosinePairs]] blocking probes ~1–2 lists and stays near-linear at
-   *    any measured scale → exact recall for free; always routed there.
-   *  - WIDE thresholds on a SMALL corpus (≤ `exactMaxRows`, default 20 k —
-   *    the measured crossover: exact ran 9.9 s at 20 k but 61.6 s at 40 k):
-   *    still exact; the quadratic term hasn't bitten yet.
-   *  - WIDE thresholds at scale: [[cosinePairsLsh]] — candidates from
-   *    banded sign-bit collisions instead of an exact-recall probe radius
-   *    that covers most lists. Zero false positives (exact verification);
-   *    recall follows the band curve (≈1 for near-dup pairs, decaying for
-   *    moderate-similarity pairs — see [[cosinePairsLsh]]).
-   *
-   * One `count()` job decides the size regime (skipped for tight
-   * thresholds). Returns `(id_a < id_b)` pairs in every regime.
-   */
-  def cosinePairsRouted(emb: DataFrame, idCol: String, vecCol: String, threshold: Double,
-      nlist: Int = 16, exactMaxRows: Long = 20000L, tightThreshold: Double = 0.8,
-      bands: Int = 12, rowsPerBand: Int = 12, seed: Long = 42L): DataFrame =
-    if (threshold >= tightThreshold || emb.count() <= exactMaxRows)
-      cosinePairs(emb, idCol, vecCol, threshold, nlist, seed = seed)
-    else cosinePairsLsh(emb, idCol, vecCol, threshold, bands, rowsPerBand, seed)
 
   /**
    * Semantic dedup (the SemDeDup shape, Abbas et al. 2023,
@@ -1137,9 +1091,9 @@ object Similarity {
    * representative each, chosen by a caller-supplied quality ordering.
    *
    * Composition of three operators already pinned individually:
-   * [[cosinePairs]] (exact cosine ≥ `threshold`, IVF-blocked — the
-   * candidate restriction SemDeDup gets from its k-means clusters, here
-   * with exact recall instead of cluster-boundary blindness) →
+   * [[cosinePairs]] (cosine ≥ `threshold`, size-routed — the candidate
+   * restriction SemDeDup gets from its k-means clusters, here with exact
+   * recall below the crossover instead of cluster-boundary blindness) →
    * [[graft.ext.Dedup.connectedComponents]] (pairwise hits → duplicate
    * groups) → [[graft.ext.Dedup.keepBest]] (one winner per group under
    * `ordering`, singletons pass through untouched, the corpus itself
@@ -1154,35 +1108,18 @@ object Similarity {
    * EAGER like [[graft.ext.Dedup.connectedComponents]] (convergence
    * detection runs jobs at call time); compute once and reuse.
    *
-   * Scale: pair formation is IVF-blocked (near-dup thresholds probe ~1–2
-   * lists), components contract in O(log) rounds, and keep-best
-   * broadcasts only cluster MEMBERS — at 100 TB the corpus-sized frames
-   * move through exactly one keyed shuffle (the pair join), never a
-   * window over the full corpus. For wide thresholds at scale route the
-   * pair step through [[cosinePairsRouted]] yourself and feed the pairs
-   * to `connectedComponents`/`keepBest` directly.
+   * Scale: below the pair router's crossover (tight threshold, or ≤ 20 k
+   * vectors) the pairs are exact and IVF-blocked; past it they come from
+   * the banded LSH route (zero false positives, band-curve recall — see
+   * [[cosinePairsLsh]]) and the components/keep-best stages are unchanged.
+   * Components contract in O(log) rounds, and keep-best broadcasts only
+   * cluster MEMBERS — at 100 TB the corpus-sized frames move through
+   * exactly one keyed shuffle (the pair join), never a window over the
+   * full corpus.
    */
   def semanticDedup(emb: DataFrame, idCol: String, vecCol: String, threshold: Double,
-      ordering: Seq[Column], nlist: Int = 16): DataFrame = {
-    val pairs = cosinePairs(emb, idCol, vecCol, threshold, nlist)
-    val clusters = Dedup.connectedComponents(pairs, "id_a", "id_b")
-    Dedup.keepBest(emb, clusters, idCol, ordering)
-  }
-
-  /**
-   * [[semanticDedup]] with the pair step behind [[cosinePairsRouted]] —
-   * the form the gate pins (r17 verdict: the gated plan must be the one
-   * that survives 100×). Below the router's exact crossover (tight
-   * threshold, or ≤ `exactMaxRows` vectors) this IS the exact operator,
-   * pair for pair; past it the near-dup pairs come from the banded LSH
-   * path (zero false positives, band-curve recall — see
-   * [[cosinePairsLsh]]) and the components/keep-best stages are unchanged.
-   */
-  def semanticDedupRouted(emb: DataFrame, idCol: String, vecCol: String,
-      threshold: Double, ordering: Seq[Column], nlist: Int = 16,
-      exactMaxRows: Long = 20000L): DataFrame = {
-    val pairs = cosinePairsRouted(emb, idCol, vecCol, threshold, nlist,
-      exactMaxRows = exactMaxRows)
+      ordering: Seq[Column]): DataFrame = {
+    val pairs = cosinePairs(emb, idCol, vecCol, threshold)
     val clusters = Dedup.connectedComponents(pairs, "id_a", "id_b")
     Dedup.keepBest(emb, clusters, idCol, ordering)
   }
@@ -1197,7 +1134,7 @@ object Similarity {
    * contrastive loss) — so exclusion must happen BEFORE the rank, not by
    * post-filtering the top-k (which would return fewer than `k`).
    *
-   * Composition: exact [[cosinePairs]] at `dupThreshold` → connected
+   * Composition: size-routed [[cosinePairs]] at `dupThreshold` → connected
    * components → the cluster-mate pair set (membership² within clusters —
    * tiny, size-gated broadcast); the scored query×corpus frame anti-joins
    * the mates and ranks what's left via the bounded map-side
@@ -1205,33 +1142,22 @@ object Similarity {
    * the whole |Q|×|C| scored frame to per-query reducers, the aggregator
    * moves ≤ k pairs per (query × map partition) under the identical
    * (cos DESC, id ASC) total order. EAGER like every components consumer.
+   *
+   * The quadratic term at scale is the wide-threshold duplicate search, not
+   * the |Q|×|C| scoring (linear in the corpus for a bounded query set), so
+   * the router is what keeps this linear (r17 verdict: the brute-force
+   * regime measured 196× at 100×). Past the crossover the excluded mates
+   * come from the banded LSH route: zero false positives, but a
+   * band-curve-missed moderate-similarity mate can re-enter the negative
+   * pool — the documented trade.
    */
   def hardNegatives(corpus: DataFrame, queries: DataFrame, idCol: String,
-      vecCol: String, k: Int, dupThreshold: Double, nlist: Int = 16): DataFrame = {
-    val pairs = cosinePairs(corpus, idCol, vecCol, dupThreshold, nlist)
-    negativesFromPairs(pairs, corpus, queries, idCol, vecCol, k)
-  }
+      vecCol: String, k: Int, dupThreshold: Double): DataFrame =
+    negativesFromPairs(cosinePairs(corpus, idCol, vecCol, dupThreshold),
+      corpus, queries, idCol, vecCol, k)
 
-  /**
-   * [[hardNegatives]] with duplicate detection behind [[cosinePairsRouted]]
-   * — the gated form (r17 verdict: the brute-force query×corpus regime was
-   * the marathon's worst scale-killer at 196×, and the quadratic term is
-   * the wide-threshold pair search, not the |Q|×|C| scoring, which stays
-   * linear in the corpus for a bounded query set). Below the router's
-   * exact crossover this is bit-identical to [[hardNegatives]]; past it
-   * the excluded cluster-mates come from the banded LSH path (zero false
-   * positives; a band-curve-missed moderate-similarity mate can re-enter
-   * the negative pool — the documented trade).
-   */
-  def hardNegativesRouted(corpus: DataFrame, queries: DataFrame, idCol: String,
-      vecCol: String, k: Int, dupThreshold: Double, nlist: Int = 16,
-      exactMaxRows: Long = 20000L): DataFrame = {
-    val pairs = cosinePairsRouted(corpus, idCol, vecCol, dupThreshold, nlist,
-      exactMaxRows = exactMaxRows)
-    negativesFromPairs(pairs, corpus, queries, idCol, vecCol, k)
-  }
-
-  private def negativesFromPairs(pairs: DataFrame, corpus: DataFrame,
+  /** [[hardNegatives]] over a given duplicate-pair set `(id_a, id_b)`. */
+  private[graft] def negativesFromPairs(pairs: DataFrame, corpus: DataFrame,
       queries: DataFrame, idCol: String, vecCol: String, k: Int): DataFrame = {
     val clusters = Dedup.connectedComponents(pairs, "id_a", "id_b")
     val mates = graft.ops.Ops.hintIfSmall(
@@ -1250,11 +1176,23 @@ object Similarity {
   }
 
   /**
-   * Size-routed bitext mining: the exact |A|×|B| grid ([[bitextMarginMine]])
-   * while both sides fit `exactMaxRows`, the IVF-pooled composition
-   * ([[bitextMarginMinePooled]]) past it. Below the crossover the result is
-   * bit-identical to the exact operator (same code path); past it recall
-   * follows probe quality and the margins use actual pool sizes.
+   * Margin-based bitext mining (the LASER/CCMatrix parallel-corpus
+   * criterion, Artetxe & Schwenk 2019): candidate pairs are MUTUAL nearest
+   * neighbors across the two sides, scored by the ratio margin
+   * `cos(x,y) / ((mean top-k cos of x in B + mean top-k cos of y in A)/2)`
+   * — the margin discounts hubs (vectors close to everything), which a raw
+   * cosine cut cannot, and is the standard filter for mining aligned
+   * sentence/document pairs for translation training data.
+   *
+   * Returns `(a_id, b_id, margin)` for every mutual-NN1 pair, margin
+   * rounded to 6, ordered margin DESC with `a_id` tiebreak. No threshold is
+   * applied here — thresholding is a caller policy (and a gate with a cut
+   * would flap on the boundary ulp); the margin column is the cut key.
+   *
+   * Size-routed: the exact |A|×|B| grid ([[bitextMarginMineExact]]) while
+   * both sides fit 20 k vectors, the IVF-pooled composition
+   * ([[bitextMarginMinePooled]]) past it. Past the crossover recall follows
+   * probe quality and the margins use actual pool sizes.
    *
    * Pooled sizing is the FAISS-style deep-quantizer regime: `nlist ≈ 4√n`
    * with a FIXED probe count (`nprobe = 32`), not a fixed probe FRACTION.
@@ -1268,31 +1206,31 @@ object Similarity {
    * past the ceiling want a distributed-trained quantizer, which this
    * driver-side k-means deliberately is not). It is also the measured
    * recall winner, not just the cheaper point: on the 30k×30k replica
-   * frontier (BitextSizingProbe, r20) the old `√n`-lists/1-16th-fraction
-   * sizing mined 43% of the exact grid's pairs at a 5.8% probe fraction,
-   * while `4√n`-lists/nprobe-32 mined 62% at 4.6% — finer lists waste
-   * less of the probe budget on far-field vectors, so the deeper
-   * quantizer wins both axes at once.
+   * frontier (BASELINE.md, round-20 100× posture probe, "FAISS-style deep
+   * quantizer" record) the old `√n`-lists/1-16th-fraction sizing mined 43%
+   * of the exact grid's pairs at a 5.8% probe fraction, while
+   * `4√n`-lists/nprobe-32 mined 62% at 4.6% — finer lists waste less of the
+   * probe budget on far-field vectors, so the deeper quantizer wins both
+   * axes at once.
    *
    * The training sample scales with the quantizer (`≥ 8 vectors per
    * centroid`, capped at 32 k draws): a fixed 4096-draw sample would hand
    * a 4096-list quantizer ONE point per centroid — random-sample
    * centroids, not k-means — silently voiding the measured frontier.
-   * `sampleSize` is therefore a FLOOR, raised to `8·nlist` when the
-   * corpus-derived nlist outgrows it (measured at 100k×100k: the scaled
-   * sample's NN1 recall beats the fixed-4096 quantizer's, see
-   * BitextSizingProbe's `recall` mode).
+   * 4096 is therefore a FLOOR, raised to `8·nlist` when the corpus-derived
+   * nlist outgrows it (measured at 100k×100k in the same BASELINE.md
+   * record: the scaled sample's NN1 recall beats the fixed-4096
+   * quantizer's).
    */
-  def bitextMarginMineRouted(a: DataFrame, b: DataFrame, idCol: String,
-      vecCol: String, k: Int = 4, exactMaxRows: Long = 20000L,
-      sampleSize: Int = 4096, seed: Long = 42L): DataFrame = {
+  def bitextMarginMine(a: DataFrame, b: DataFrame, idCol: String,
+      vecCol: String, k: Int = 4): DataFrame = {
     val n = math.max(a.count(), b.count())
-    if (n <= exactMaxRows) bitextMarginMine(a, b, idCol, vecCol, k)
+    if (n <= ExactMaxRows) bitextMarginMineExact(a, b, idCol, vecCol, k)
     else {
       val nlist = math.min(4096L, math.max(16L, 4L * math.sqrt(n.toDouble).toLong)).toInt
       val nprobe = math.min(nlist, 32)
-      val sample = math.min(32768, math.max(sampleSize, 8 * nlist))
-      bitextMarginMinePooled(a, b, idCol, vecCol, k, nlist, nprobe, sample, seed)
+      val sample = math.min(32768, math.max(4096, 8 * nlist))
+      bitextMarginMinePooled(a, b, idCol, vecCol, k, nlist, nprobe, sample)
     }
   }
 }

@@ -1,7 +1,7 @@
 package graft
 package gates
 
-import graft.ext.{Dedup, Sampling, Similarity}
+import graft.ext.{Caches, Dedup, Sampling, Similarity}
 import graft.io.Tables
 import graft.ops.Ops
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
@@ -90,8 +90,8 @@ object DedupGates {
   private type SharpenCert = (Seq[Row], Seq[Row], StructType, Long)
   private val sharpenCert = Fixture[SharpenCert] { (s, d) =>
     val e = sharpenFixture(s, d)
-    val exact = Similarity.cosinePairs(e, "vec_id", "embedding", 0.45)
-    val near = Similarity.cosinePairs(e, "vec_id", "embedding", 0.99)
+    val exact = Similarity.cosinePairsExact(e, "vec_id", "embedding", 0.45)
+    val near = Similarity.cosinePairsExact(e, "vec_id", "embedding", 0.99)
     val est = Similarity.lshCandidateEstimate(e, "vec_id", "embedding")
     (collectCapped("dedup_cosine_lsh_sharpen", exact),
       collectCapped("dedup_cosine_lsh_sharpen", near), exact.schema, est)
@@ -100,14 +100,14 @@ object DedupGates {
   /** The routed gate's corpus-deterministic CERTIFICATION sides — the
     * exact brute-force pairs at 0.45 and the planted cos >= 0.99 near-dup
     * band over the same plantNearDups fixture — collected once per JVM
-    * (the [[sharpenCert]] class). The ROUTED LSH search at
-    * autoSharpen=false is NOT a fixture: it is the operator this gate
-    * certifies and runs fresh against these sides every time. */
+    * (the [[sharpenCert]] class). The routed LSH search is NOT a
+    * fixture: it is the operator this gate certifies and runs fresh
+    * against these sides every time. */
   private type RoutedCert = (Seq[Row], Seq[Row], StructType)
   private val routedCert = Fixture[RoutedCert] { (s, d) =>
     val e = Similarity.plantNearDups(emb(s, d), "vec_id", "embedding")
-    val exact = Similarity.cosinePairs(e, "vec_id", "embedding", 0.45)
-    val near = Similarity.cosinePairs(e, "vec_id", "embedding", 0.99)
+    val exact = Similarity.cosinePairsExact(e, "vec_id", "embedding", 0.45)
+    val near = Similarity.cosinePairsExact(e, "vec_id", "embedding", 0.99)
     (collectCapped("dedup_cosine_lsh_routed", exact),
       collectCapped("dedup_cosine_lsh_routed", near), exact.schema)
   }
@@ -523,14 +523,14 @@ object DedupGates {
       Dedup.simhashPairs(docs(s, d), "doc_id", "text", 3, Dedup.md5TokenHash)),
     // gated through the ROUTER (r17 verdict: the gated plan must be the one
     // that survives 100×): at gate scale the router picks the exact
-    // IVF-blocked path — bit-identical to cosinePairs, so the brute-force
+    // IVF-blocked path — bit-identical to cosinePairsExact, so the brute-force
     // oracle applies — and past the measured crossover (20 k vectors, wide
     // threshold) it switches to the banded-LSH scale path
     Gate("dedup_embedding_cosine",
       """SELECT a.vec_id AS id_a, b.vec_id AS id_b
         |  FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
         | WHERE list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]) >= 0.45""".stripMargin)((s, d) =>
-      Similarity.cosinePairsRouted(emb(s, d), "vec_id", "embedding", 0.45)),
+      Similarity.cosinePairs(emb(s, d), "vec_id", "embedding", 0.45)),
     // SemDeDup (Abbas et al. 2023): embedding-space near-dup groups collapsed
     // to their best member by document quality (n_chars desc, id asc tie) —
     // vec_id ≡ doc_id in the fixtures, so the quality column cross-joins the
@@ -560,7 +560,7 @@ object DedupGates {
          |SELECT vec_id, label, n_chars FROM win""".stripMargin)((s, d) => {
       val q = emb(s, d).join(
         docs(s, d).select(col("doc_id").as("vec_id"), col("n_chars")), Seq("vec_id"))
-      Similarity.semanticDedupRouted(q, "vec_id", "embedding", 0.45,
+      Similarity.semanticDedup(q, "vec_id", "embedding", 0.45,
         Seq(col("n_chars").desc, col("vec_id").asc))
         .select("vec_id", "label", "n_chars")
     }),
@@ -598,7 +598,7 @@ object DedupGates {
       // the sharpen gate's contract is the same empty violation set — the
       // escalation itself is certified structurally (the query cannot
       // complete without it: the fixture exceeds the explicit budget at the
-      // caller's shape, which is the loud-refusal path otherwise)
+      // 12×12 base shape, which is the loud-refusal path otherwise)
       """SELECT CAST(NULL AS VARCHAR) AS kind, CAST(NULL AS BIGINT) AS id_a,
         |       CAST(NULL AS BIGINT) AS id_b
         |  FROM embeddings WHERE FALSE""".stripMargin, sharpenCert, (s, d, cert) => {
@@ -614,7 +614,7 @@ object DedupGates {
       val nearDup = s.createDataFrame(nearRows.asJava, pairSchema)
       // the OPERATOR under certification — the escalated LSH search runs
       // fresh on every invocation
-      val lsh = Similarity.trackedPersist(
+      val lsh = Caches.track(
         Similarity.cosinePairsLsh(e, "vec_id", "embedding", 0.45,
           pairBudget = 12000L))
       val fp = lsh.exceptAll(exact)
@@ -626,7 +626,7 @@ object DedupGates {
         .select(lit("vacuous_near_dup_band").as("kind"),
           col("n").as("id_a"), lit(-1L).as("id_b"))
       // the forcing premise, asserted at RUNTIME (r19 review fix): the
-      // gate certifies the ladder only if the caller-shape estimate
+      // gate certifies the ladder only if the base-shape estimate
       // actually exceeds the budget — computed from the operator's own
       // bucketing primitive, so fixture drift that un-forces the
       // escalation turns into a violation row instead of a silent pass
@@ -651,14 +651,15 @@ object DedupGates {
       import scala.jdk.CollectionConverters._
       val exact = s.createDataFrame(exactRows.asJava, pairSchema)
       val nearDup = s.createDataFrame(nearRows.asJava, pairSchema)
-      // autoSharpen OFF: the contract certifies the DOCUMENTED 12×12 band
-      // curve (and the gate's exact-search side is only feasible below the
-      // crossover anyway — at marathon scale this gate's pair-budget
-      // refusal remains the designed behavior). The routed LSH search is
-      // the OPERATOR and runs fresh; it feeds two contract branches, so
-      // it persists (this query is one pair search, not two)
-      val lsh = Similarity.trackedPersist(
-        Similarity.cosinePairsLsh(e, "vec_id", "embedding", 0.45, autoSharpen = false))
+      // the contract certifies the DOCUMENTED 12×12 band curve: at the
+      // fixture scales (sf0.001–sf0.1: ≤ 2,040 vectors with the planted
+      // companions, so at most C(2040,2)×12 ≈ 25 M band collisions) the
+      // base shape fits the default 100 M pair budget and the ladder keeps
+      // it unsharpened. The routed LSH search is the OPERATOR and runs
+      // fresh; it feeds two contract branches, so it persists (this query
+      // is one pair search, not two)
+      val lsh = Caches.track(
+        Similarity.cosinePairsLsh(e, "vec_id", "embedding", 0.45))
       val fp = lsh.exceptAll(exact)
         .select(lit("false_positive").as("kind"), col("id_a"), col("id_b"))
       val missedNearDup = nearDup.exceptAll(lsh)

@@ -214,7 +214,7 @@ object SimilarityGates {
     // SIZE-ROUTED (r17 verdict): the exact |A|×|B| grid at gate scale —
     // the oracle's regime, same code path — and the IVF-pooled CCMatrix
     // composition (4√n-list quantizer, fixed nprobe=32 — the measured
-    // r20 frontier winner, see bitextMarginMineRouted) past 20 k vectors
+    // r20 frontier winner, see bitextMarginMine) past 20 k vectors
     Gate("sim_bitext_margin",
       // RRF re-derived: the bm25 CTEs with a 50-pool cut, the cosine pool
       """WITH av AS (SELECT vec_id AS a_id, embedding::DOUBLE[] AS v
@@ -236,7 +236,7 @@ object SimilarityGates {
         | WHERE rn_a = 1 AND rn_b = 1
         | ORDER BY margin DESC, r.a_id""".stripMargin)((s, d) => {
       val e = emb(s, d)
-      Similarity.bitextMarginMineRouted(
+      Similarity.bitextMarginMine(
         e.filter(col("vec_id") % 2 === 0), e.filter(col("vec_id") % 2 === 1),
         "vec_id", "embedding", k = 4)
     }),
@@ -413,7 +413,7 @@ object SimilarityGates {
          |                      WHERE m.qid = q.vec_id AND m.nid = c.vec_id)) x
          | WHERE rn <= 5""".stripMargin)((s, d) => {
       val e = emb(s, d)
-      Similarity.hardNegativesRouted(e, e.filter(col("vec_id") < 10),
+      Similarity.hardNegatives(e, e.filter(col("vec_id") < 10),
         "vec_id", "embedding", 5, 0.45)
     }),
     // gated at nprobe = nlist: full-probe IVF is EXACTLY brute force (every

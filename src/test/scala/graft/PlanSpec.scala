@@ -54,7 +54,7 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterEach {
   test("cosinePairs never degrades to a nested-loop / cartesian pair scan") {
     // the pre-IVF implementation was a BroadcastNestedLoopJoin over the whole
     // corpus (id_a < id_b): exactly the plan that OOMs at 100× scale
-    val p = plan(graft.ext.Similarity.cosinePairs(emb, "vec_id", "embedding", 0.45))
+    val p = plan(graft.ext.Similarity.cosinePairsExact(emb, "vec_id", "embedding", 0.45))
     assert(!p.contains("BroadcastNestedLoopJoin"), p.take(2000))
     assert(!p.contains("CartesianProduct"), p.take(2000))
   }

@@ -77,7 +77,7 @@ class SimilaritySpec extends AnyFunSuite with org.scalatest.BeforeAndAfterEach {
   test("bitextMarginMinePooled: full probe ≡ exact grid; partial probe keeps recall") {
     val a = emb.filter(col("vec_id") % 2 === 0)
     val b = emb.filter(col("vec_id") % 2 === 1)
-    val exact = Similarity.bitextMarginMine(a, b, "vec_id", "embedding", k = 4)
+    val exact = Similarity.bitextMarginMineExact(a, b, "vec_id", "embedding", 4)
       .as[(Long, Long, Double)].collect()
     Dedup.unpersistAll()
     val full = Similarity.bitextMarginMinePooled(a, b, "vec_id", "embedding",
@@ -266,7 +266,7 @@ class SimilaritySpec extends AnyFunSuite with org.scalatest.BeforeAndAfterEach {
     val exact = a.join(b, col("id_a") < col("id_b"))
       .filter(Similarity.cosine(col("ea"), col("eb")) >= 0.45)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    val blocked = Similarity.cosinePairs(emb, "vec_id", "embedding", 0.45)
+    val blocked = Similarity.cosinePairsExact(emb, "vec_id", "embedding", 0.45)
       .as[(Long, Long)].collect().toSet
     assert(exact.nonEmpty) // fixtures plant near-duplicate embeddings
     assert(blocked == exact)
@@ -318,7 +318,7 @@ class SimilaritySpec extends AnyFunSuite with org.scalatest.BeforeAndAfterEach {
     // planted pairs must all collide in >= 1 of 12 bands (the band curve
     // puts their collision probability at ~1; deterministic under the seed)
     val planted = Similarity.plantNearDups(emb, "vec_id", "embedding")
-    val exact = Similarity.cosinePairs(planted, "vec_id", "embedding", 0.45)
+    val exact = Similarity.cosinePairsExact(planted, "vec_id", "embedding", 0.45)
       .as[(Long, Long)].collect().toSet
     val lsh = Similarity.cosinePairsLsh(planted, "vec_id", "embedding", 0.45)
       .as[(Long, Long)].collect().toSet
@@ -337,22 +337,22 @@ class SimilaritySpec extends AnyFunSuite with org.scalatest.BeforeAndAfterEach {
       s"missed near-dup pairs: ${(nearDup -- lsh).take(5)}")
   }
 
-  test("cosinePairsRouted picks exact below the crossover and stays identical there") {
+  test("cosinePairs picks exact below the crossover and stays identical there") {
     // tight threshold: routed == exact regardless of size; wide threshold
-    // under exactMaxRows: still exact (the measured sub-crossover regime)
-    val exactTight = Similarity.cosinePairs(emb, "vec_id", "embedding", 0.9)
+    // under the 20 k crossover: still exact (the measured sub-crossover regime)
+    val exactTight = Similarity.cosinePairsExact(emb, "vec_id", "embedding", 0.9)
       .as[(Long, Long)].collect().toSet
-    val routedTight = Similarity.cosinePairsRouted(emb, "vec_id", "embedding", 0.9)
+    val routedTight = Similarity.cosinePairs(emb, "vec_id", "embedding", 0.9)
       .as[(Long, Long)].collect().toSet
     assert(routedTight == exactTight)
-    val exactWide = Similarity.cosinePairs(emb, "vec_id", "embedding", 0.45)
+    val exactWide = Similarity.cosinePairsExact(emb, "vec_id", "embedding", 0.45)
       .as[(Long, Long)].collect().toSet
-    val routedWide = Similarity.cosinePairsRouted(emb, "vec_id", "embedding", 0.45)
+    val routedWide = Similarity.cosinePairs(emb, "vec_id", "embedding", 0.45)
       .as[(Long, Long)].collect().toSet
     assert(routedWide == exactWide)
-    // forcing the crossover to zero exercises the LSH branch end-to-end
-    val forced = Similarity.cosinePairsRouted(emb, "vec_id", "embedding", 0.45,
-      exactMaxRows = 0L).as[(Long, Long)].collect().toSet
+    // the route past the crossover, end-to-end on the same corpus
+    val forced = Similarity.cosinePairsLsh(emb, "vec_id", "embedding", 0.45)
+      .as[(Long, Long)].collect().toSet
     graft.ext.Dedup.unpersistAll()
     assert((forced -- exactWide).isEmpty, "routed LSH regime must keep zero false positives")
   }
@@ -371,7 +371,7 @@ class SimilaritySpec extends AnyFunSuite with org.scalatest.BeforeAndAfterEach {
       .select("neighbor_id").as[Long].collect().toSet
     graft.ext.Dedup.unpersistAll()
     assert(naive.contains(1L), "precondition: the near-dup IS the naive top hit")
-    val hard = Similarity.hardNegatives(df, queries, "id", "vec", 2, 0.9, nlist = 2)
+    val hard = Similarity.hardNegatives(df, queries, "id", "vec", 2, 0.9)
       .select("neighbor_id").as[Long].collect().toSet
     graft.ext.Dedup.unpersistAll()
     assert(!hard.contains(1L), "the near-dup must never be a negative")
@@ -390,16 +390,16 @@ class SimilaritySpec extends AnyFunSuite with org.scalatest.BeforeAndAfterEach {
       (5L, Array(0.01f, 0.0f, 1.0f), 30L))
     val df = rows.toDF("id", "vec", "quality")
     val got = Similarity.semanticDedup(df, "id", "vec", 0.9,
-      Seq(col("quality").desc, col("id").asc), nlist = 2)
+      Seq(col("quality").desc, col("id").asc))
       .select("id").as[Long].collect().toSet
     graft.ext.Dedup.unpersistAll()
     assert(got == Set(1L, 3L, 4L))
   }
 
-  test("cosinePairsLsh auto-sharpening: dense corpus proceeds on a sharper rung; pinned shape refuses") {
+  test("cosinePairsLsh auto-sharpening: dense corpus proceeds on a sharper rung") {
     // two 50-member clusters at intra-cos ≈ 0.9: at 12×12 the band buckets
-    // hold enough cluster-mates to blow a 2000-pair budget, so the pinned
-    // shape must REFUSE (the r17 marathon behavior) while auto-sharpening
+    // hold enough cluster-mates to blow a 2000-pair budget (the base shape
+    // alone would refuse, the r17 marathon behavior), so auto-sharpening
     // escalates to a sharper rung and completes with zero false positives
     val rnd = new scala.util.Random(7L)
     def unit(v: Array[Double]): Array[Double] = {
@@ -413,9 +413,8 @@ class SimilaritySpec extends AnyFunSuite with org.scalatest.BeforeAndAfterEach {
       (i.toLong, v.map(_.toFloat))
     }
     val df = rows.toDF("id", "vec")
-    intercept[Exception](Similarity.cosinePairsLsh(df, "id", "vec", 0.8,
-      pairBudget = 2000L, autoSharpen = false).count())
-    graft.ext.Dedup.unpersistAll()
+    // the forcing premise: the base shape's estimate is over the budget
+    assert(Similarity.lshCandidateEstimate(df, "id", "vec") > 2000L)
     val sharpened = Similarity.cosinePairsLsh(df, "id", "vec", 0.8,
       pairBudget = 2000L).as[(Long, Long)].collect()
     graft.ext.Dedup.unpersistAll()
@@ -443,51 +442,54 @@ class SimilaritySpec extends AnyFunSuite with org.scalatest.BeforeAndAfterEach {
       (4L, Array(0.0f, 0.01f, 1.0f), 30L),
       (5L, Array(0.01f, 0.0f, 1.0f), 30L))
     val df = dedupRows.toDF("id", "vec", "quality")
-    val exactDedup = Similarity.semanticDedup(df, "id", "vec", 0.9,
-      Seq(col("quality").desc, col("id").asc), nlist = 2)
+    val ordering = Seq(col("quality").desc, col("id").asc)
+    val exactDedup = Dedup.keepBest(df, Dedup.connectedComponents(
+        Similarity.cosinePairsExact(df, "id", "vec", 0.9), "id_a", "id_b"), "id", ordering)
       .select("id").as[Long].collect().toSet
     graft.ext.Dedup.unpersistAll()
-    val routedDedup = Similarity.semanticDedupRouted(df, "id", "vec", 0.9,
-      Seq(col("quality").desc, col("id").asc), nlist = 2)
+    val routedDedup = Similarity.semanticDedup(df, "id", "vec", 0.9, ordering)
       .select("id").as[Long].collect().toSet
     graft.ext.Dedup.unpersistAll()
     assert(routedDedup == exactDedup)
 
     val queries = df.filter($"id" === 0L)
-    val exactHard = Similarity.hardNegatives(df, queries, "id", "vec", 2, 0.9, nlist = 2)
+    val exactHard = Similarity.negativesFromPairs(
+        Similarity.cosinePairsExact(df, "id", "vec", 0.9), df, queries, "id", "vec", 2)
       .select("neighbor_id").as[Long].collect().toSet
     graft.ext.Dedup.unpersistAll()
-    val routedHard = Similarity.hardNegativesRouted(df, queries, "id", "vec", 2, 0.9,
-      nlist = 2).select("neighbor_id").as[Long].collect().toSet
+    val routedHard = Similarity.hardNegatives(df, queries, "id", "vec", 2, 0.9)
+      .select("neighbor_id").as[Long].collect().toSet
     graft.ext.Dedup.unpersistAll()
     // mates of query 0 are its cluster {1, 2}; of the rest, v3 and v5 tie
     // near cos≈0.01 ahead of v4 (cos≈1e-4) → negatives {3, 5}
     assert(routedHard == exactHard && routedHard == Set(3L, 5L))
-    // forcing the crossover to zero exercises the LSH dup-detection branch:
-    // still exactly k negatives per query, and LSH's zero-false-positive
-    // contract means no NON-duplicate is ever excluded (the excluded set can
-    // only shrink, so negatives stay the top-k of a superset-or-equal pool)
-    val forcedHard = Similarity.hardNegativesRouted(df, queries, "id", "vec", 2, 0.9,
-      nlist = 2, exactMaxRows = 0L).select("neighbor_id").as[Long].collect()
+    // the LSH dup-detection route past the crossover: still exactly k
+    // negatives per query, and LSH's zero-false-positive contract means no
+    // NON-duplicate is ever excluded (the excluded set can only shrink, so
+    // negatives stay the top-k of a superset-or-equal pool)
+    val forcedHard = Similarity.negativesFromPairs(
+        Similarity.cosinePairsLsh(df, "id", "vec", 0.9), df, queries, "id", "vec", 2)
+      .select("neighbor_id").as[Long].collect()
     graft.ext.Dedup.unpersistAll()
     assert(forcedHard.length == 2)
 
     val a = emb.filter($"vec_id" % 2 === 0)
     val b = emb.filter($"vec_id" % 2 === 1)
-    val exactBitext = Similarity.bitextMarginMine(a, b, "vec_id", "embedding", k = 4)
+    val exactBitext = Similarity.bitextMarginMineExact(a, b, "vec_id", "embedding", 4)
       .collect().map(_.toSeq).toSet
     graft.ext.Dedup.unpersistAll()
-    val routedBitext = Similarity.bitextMarginMineRouted(a, b, "vec_id", "embedding", k = 4)
+    val routedBitext = Similarity.bitextMarginMine(a, b, "vec_id", "embedding", k = 4)
       .collect().map(_.toSeq).toSet
     graft.ext.Dedup.unpersistAll()
     assert(routedBitext == exactBitext)
-    // forced pooled branch: structural sanity only (a partial probe may
-    // both lose exact pairs and promote pool-local mutual-NN1s — recall
-    // bounds for the pooled composition are pinned by the dedicated
+    // the pooled route at the router's sizing for 250 vectors a side
+    // (nlist = 4√n = 63, nprobe = 32): structural sanity only (a partial
+    // probe may both lose exact pairs and promote pool-local mutual-NN1s —
+    // recall bounds for the pooled composition are pinned by the dedicated
     // bitextMarginMinePooled spec and ScaleSmoke): sides keep their id
     // parity and each side contributes a given id at most once
-    val forcedBitext = Similarity.bitextMarginMineRouted(a, b, "vec_id", "embedding",
-      k = 4, exactMaxRows = 0L).select("a_id", "b_id")
+    val forcedBitext = Similarity.bitextMarginMinePooled(a, b, "vec_id", "embedding",
+      k = 4, nlist = 63, nprobe = 32).select("a_id", "b_id")
       .as[(Long, Long)].collect()
     graft.ext.Dedup.unpersistAll()
     assert(forcedBitext.forall { case (ai, bi) => ai % 2 == 0 && bi % 2 == 1 })
